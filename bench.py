@@ -254,7 +254,7 @@ def main() -> None:
 
     stream_in = os.path.join(tempfile.gettempdir(), f"bench_stream_in_{N_PAGES}")
     if not os.path.exists(stream_in):
-        # 32 drop files → two 16-file triggers at the default max_files
+        # 32 drop files → one trigger at the default max_files=64
         pages.repartition(32).write.parquet(stream_in)
     stream_out = os.path.join(tempfile.gettempdir(), "bench_stream_out")
     shutil.rmtree(stream_out, ignore_errors=True)

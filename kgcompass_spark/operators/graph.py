@@ -6,21 +6,144 @@
   G6    pagerank          — root-seeded power iteration (α=0.85)
                             (knowledge_graph.py:1288-1345)
   G8    connected_components — delta-frontier min-label propagation with
-                            double pointer jumping, the canonicalization CC
+                            stale pointer jumping, the canonicalization CC
                             required at web scale (north_rule)
 
-Iteration hygiene (SURVEY.md §4.2): every loop ``localCheckpoint``s each
-round to cut lineage — without it the plan doubles per iteration and the
-driver OOMs planning, not executing. Convergence checks are single scalar
-aggregates.
+Iteration hygiene (SURVEY.md §4.2): every loop runs through ``_fixpoint``,
+which materializes the round state to cut lineage — without it the plan
+doubles per iteration and the driver OOMs planning, not executing. The
+frontier loops materialize every round and stop on an empty delta; the two
+power iterations run a fixed round count and materialize every 6th round.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SIMILARITY_CANDIDATE_CAP
+
+#: connected_components replaces every 4th round's checkpoint with a parquet
+#: round trip that resets Catalyst's size estimate (see there). Graphs that
+#: converge in fewer rounds never pay it.
+_SPILL_EVERY = 4
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=True)
+
+
+def _fixpoint(
+    step,
+    state: DataFrame,
+    frontier: DataFrame | None,
+    rounds: int,
+    *,
+    every: int = 1,
+    count: bool = False,
+    lazy_delta: bool = False,
+    probe_from: int = 0,
+    strict: bool = False,
+    spill: bool = False,
+    spill_dir: str | None = None,
+) -> DataFrame:
+    """The one loop behind every iterative operator in this module.
+
+    ``step(state, frontier, n, r)`` builds round ``r`` and returns
+    ``(state, delta)``: the next state as a lazy plan, and either None (a
+    fixed-round power iteration) or a function from the materialized state to
+    the rows that changed this round, the next ``frontier``. ``n`` is the
+    last probe's result: the frontier's row count with ``count``, else True;
+    None before the first probe.
+
+    Frontier loops materialize the state every round, checkpoint the delta
+    (unless ``lazy_delta``: it is a cheap filter of the state), probe it from
+    round ``probe_from`` on and stop when it is empty. Their final round skips
+    the delta nothing would read and returns the state unmaterialized. With
+    ``strict`` the final round is probed instead, and rows still changing
+    raise RuntimeError rather than passing partial results as a fixpoint.
+    Power iterations materialize every ``every``-th round.
+
+    ``spill``: every ``_SPILL_EVERY``-th round's state is a parquet round
+    trip through ``spill_dir``_0/_1 (default: two temp slots, deleted on
+    exit).
+    """
+    spark = state.sparkSession
+    if spill and spill_dir is None and not spark.sparkContext.master.startswith("local"):
+        # a driver-local tempdir is invisible to executors on a real cluster:
+        # the parquet read-back would silently return partial data. Fall back
+        # to localCheckpoint — slower on deep graphs, never wrong.
+        spill = False
+    base = spill_dir or os.path.join(tempfile.gettempdir(), f"cc_spill_{uuid.uuid4().hex}")
+    slots = set()
+
+    def materialize(df: DataFrame, r: int) -> DataFrame:
+        if not (spill and (r + 1) % _SPILL_EVERY == 0):
+            return _checkpoint(df)
+        # alternate two slots so the overwrite never clobbers the file a
+        # live plan still reads
+        slot = f"{base}_{(r // _SPILL_EVERY) % 2}"
+        df.write.mode("overwrite").parquet(slot)
+        slots.add(slot)
+        return spark.read.parquet(slot)
+
+    try:
+        n = None
+        for r in range(rounds):
+            state, delta = step(state, frontier, n, r)
+            last = r == rounds - 1
+            if delta is None:
+                if (r + 1) % every == 0:
+                    state = materialize(state, r)
+                continue
+            if last and not strict:
+                break
+            state = materialize(state, r)
+            frontier = delta(state) if lazy_delta else _checkpoint(delta(state))
+            if r >= probe_from or last:
+                n = frontier.count() if count else not frontier.isEmpty()
+                if not n:
+                    break
+        else:
+            if strict:
+                raise RuntimeError(
+                    f"no fixpoint after {rounds} rounds: rows still changing"
+                )
+        if slots and spill_dir is None:
+            # the state may still read a slot: cut that before deleting it
+            state = _checkpoint(state)
+        return state
+    finally:
+        if spill_dir is None:
+            for slot in slots:
+                shutil.rmtree(slot, ignore_errors=True)
+
+
+def _improved(new: DataFrame, old: DataFrame, keys: list[str], col: str) -> DataFrame:
+    """Rows of ``new`` whose ``col`` is absent from or strictly below ``old``'s
+    — the next frontier of a min-fixpoint. A semi-join against the round's
+    candidates would re-propagate rows merely re-reached at a worse value."""
+    return (
+        new.join(old.select(*keys, F.col(col).alias("_old")), keys, "left")
+        .filter(F.col("_old").isNull() | (F.col(col) < F.col("_old")))
+        .drop("_old")
+    )
+
+
+def _cap(frontier: DataFrame, n, cap: int | None, by: list[str], order: list) -> DataFrame:
+    """At most ``cap`` rows per ``by`` group, first in ``order``. The window
+    sorts the whole frontier, so it runs only when the frontier's row count
+    ``n`` exceeds the cap; on most rounds it is far below. ``n`` is None for
+    the seed frontier, which has one row per group."""
+    if cap is None or n is None or n <= cap:
+        return frontier
+    w = Window.partitionBy(*by).orderBy(*order)
+    return frontier.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= cap).drop("_rn")
 
 
 def bounded_sssp(
@@ -41,64 +164,54 @@ def bounded_sssp(
     reference's 10000-candidate cap (knowledge_graph.py:1177) so the
     collect_list structs can't explode at scale.
     """
-    e = edges.select(
+    # materialize once: every round joins it, and an unmaterialized edge list
+    # re-runs its full upstream lineage (e.g. the whole KG pipeline) per round
+    e = _checkpoint(edges.select(
         F.col("subj").alias("src"),
         F.col("obj").alias("dst"),
         F.col("predicate"),
         F.col("weight").cast("double"),
-    ).localCheckpoint(eager=True)  # materialize once: every round joins it,
-    # and an unmaterialized edge list re-runs its full upstream lineage
-    # (e.g. the whole KG pipeline) per round
-    best = None  # (node, cost, hops, path)
-    frontier = (
-        e.sparkSession.createDataFrame(
-            [(root, 0.0, 0)], "node string, cost double, hops int"
-        ).withColumn(
-            "path",
-            F.array().cast("array<struct<predicate:string,node:string>>"),
-        )
+    ))
+    start = e.sparkSession.createDataFrame(
+        [(root, 0.0, 0)], "node string, cost double, hops int"
+    ).withColumn(
+        "path",
+        F.array().cast("array<struct<predicate:string,node:string>>"),
     )
-    best = frontier
-    for _ in range(max_hops):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("cost") + F.col("weight")).alias("cost"),
-                (F.col("hops") + 1).alias("hops"),
-                F.concat(
-                    "path",
-                    F.array(
-                        F.struct(
-                            F.col("predicate").alias("predicate"),
-                            F.col("dst").alias("node"),
-                        )
-                    ),
-                ).alias("path"),
-            )
+    w = Window.partitionBy("node").orderBy(
+        F.asc("cost"), F.asc("hops"), F.asc(F.col("path").cast("string"))
+    )
+
+    def step(best, frontier, n, r):
+        nxt = frontier.join(e, frontier["node"] == e["src"]).select(
+            F.col("dst").alias("node"),
+            (F.col("cost") + F.col("weight")).alias("cost"),
+            (F.col("hops") + 1).alias("hops"),
+            F.concat(
+                "path",
+                F.array(
+                    F.struct(
+                        F.col("predicate").alias("predicate"),
+                        F.col("dst").alias("node"),
+                    )
+                ),
+            ).alias("path"),
         )
         if max_cost is not None:
             nxt = nxt.filter(F.col("cost") <= max_cost)
-        merged = best.unionByName(nxt)
-        w = Window.partitionBy("node").orderBy(
-            F.asc("cost"), F.asc("hops"), F.asc(F.col("path").cast("string"))
-        )
-        best = (
-            merged.withColumn("_rn", F.row_number().over(w))
+        reached = nxt.select("node").distinct()
+        new = (
+            best.unionByName(nxt)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
-            .localCheckpoint(eager=True)
         )
-        # new frontier = nodes improved this round, width-capped deterministically
-        frontier = (
-            best.join(nxt.select("node").distinct(), "node")
-            .orderBy(F.asc("cost"), F.asc("node"))
-            .limit(frontier_cap)
-            .localCheckpoint(eager=True)
+        # new frontier = nodes reached this round, width-capped deterministically
+        return new, lambda b: (
+            b.join(reached, "node").orderBy(F.asc("cost"), F.asc("node")).limit(frontier_cap)
         )
-        if frontier.isEmpty():  # SQL-side probe; .rdd would force a conversion
-            break
-    return best
+
+    return _fixpoint(step, start, start, max_hops)
 
 
 def bounded_sssp_multi(
@@ -120,28 +233,25 @@ def bounded_sssp_multi(
     (root, node) min window. Path structs are omitted (they multiply state
     by path width × roots; use bounded_sssp for per-root path details).
     """
-    e = edges.select(
+    e = _checkpoint(edges.select(
         F.col("subj").alias("src"),
         F.col("obj").alias("dst"),
         F.col("weight").cast("double"),
-    ).localCheckpoint(eager=True)
-    frontier = roots.select(
+    ))
+    start = _checkpoint(roots.select(
         F.col("root"),
         F.col("root").alias("node"),
         F.lit(0.0).alias("cost"),
         F.lit(0).alias("hops"),
-    )
-    best = frontier.localCheckpoint(eager=True)
-    frontier = best
-    for _ in range(max_hops):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(
-                "root",
-                F.col("dst").alias("node"),
-                (F.col("cost") + F.col("weight")).alias("cost"),
-                (F.col("hops") + 1).alias("hops"),
-            )
+    ))
+
+    def step(best, frontier, n, r):
+        fr = _cap(frontier, n, frontier_cap, ["root"], [F.asc("cost"), F.asc("node")])
+        nxt = fr.join(e, fr["node"] == e["src"]).select(
+            "root",
+            F.col("dst").alias("node"),
+            (F.col("cost") + F.col("weight")).alias("cost"),
+            (F.col("hops") + 1).alias("hops"),
         )
         if max_cost is not None:
             nxt = nxt.filter(F.col("cost") <= max_cost)
@@ -149,40 +259,15 @@ def bounded_sssp_multi(
         # aggregate combines map-side, so the shuffle carries one candidate
         # per (partition, root, node) instead of sorting every generated
         # path row (state here is |roots| × |reachable| — millions)
-        merged = best.unionByName(nxt)
-        new_best = (
-            merged.groupBy("root", "node")
+        new = (
+            best.unionByName(nxt)
+            .groupBy("root", "node")
             .agg(F.min(F.struct("cost", "hops")).alias("_b"))
             .select("root", "node", F.col("_b.cost").alias("cost"), F.col("_b.hops").alias("hops"))
-            .localCheckpoint(eager=True)
         )
-        # frontier = STRICTLY IMPROVED pairs (semi-joining against nxt would
-        # re-propagate nodes that were merely re-reached at a worse cost)
-        changed = new_best.join(
-            best.select("root", "node", F.col("cost").alias("_oc")),
-            ["root", "node"],
-            "left",
-        ).filter(F.col("_oc").isNull() | (F.col("cost") < F.col("_oc"))).drop("_oc")
-        changed = changed.localCheckpoint(eager=True)
-        best = new_best
-        # count on the materialized delta is ~free; the per-root row_number
-        # window (a sort of the whole delta) only runs when some root can
-        # actually exceed the cap — on most rounds the frontier is far
-        # below it and the sort would be pure overhead
-        n_changed = changed.count()
-        if n_changed == 0:
-            break
-        if n_changed > frontier_cap:
-            wc = Window.partitionBy("root").orderBy(F.asc("cost"), F.asc("node"))
-            frontier = (
-                changed.withColumn("_rn", F.row_number().over(wc))
-                .filter(F.col("_rn") <= frontier_cap)
-                .drop("_rn")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            frontier = changed
-    return best
+        return new, lambda nb: _improved(nb, best, ["root", "node"], "cost")
+
+    return _fixpoint(step, start, start, max_hops, count=True)
 
 
 # low separator byte: joining node ids with it makes string comparison of
@@ -248,22 +333,16 @@ def seeded_support(
     # buffer type): both sides of a 12M-row exchange pay a sort to compute
     # an identity. Measured at sf1 (evidence KG, 12M-row closure): the
     # collapse alone costs ~3 s of the ~6 s edge-materialization phase.
-    if carry:
-        e = edges.select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"), "predicate"
-        )
-        if not edges_collapsed:
-            e = e.groupBy("src", "dst").agg(F.min("predicate").alias("predicate"))
-        else:
-            e = e.repartition("src", "dst")
-        e = e.localCheckpoint(eager=True)
+    e = edges.select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"), *(["predicate"] if carry else [])
+    )
+    if edges_collapsed:
+        e = e.repartition("src", "dst")
+    elif carry:
+        e = e.groupBy("src", "dst").agg(F.min("predicate").alias("predicate"))
     else:
-        e = edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        if not edges_collapsed:
-            e = e.distinct()
-        else:
-            e = e.repartition("src", "dst")
-        e = e.localCheckpoint(eager=True)
+        e = e.distinct()
+    e = _checkpoint(e)
     hop1 = roots.join(e, roots["root"] == e["src"])
     if carry:
         # (root, dst) is unique after the (src, dst) predicate collapse
@@ -292,25 +371,25 @@ def seeded_support(
                 "root", "seed", F.col("seed").alias("node"), F.lit(1).alias("hops")
             )
         )
-    best = hop1.localCheckpoint(eager=True)
+    best = _checkpoint(hop1)
     frontier = best
     if hop1_expand_excludes:
         frontier = frontier.filter(
             ~F.split(F.col("node"), ":", 2)[0].isin(*hop1_expand_excludes)
         )
-    n_front = frontier.count()
-    for h in range(2, max_hops + 1):
-        fr = frontier
-        # the per-(root, seed) cap window sorts the whole frontier — apply
-        # it only when some seed could exceed the cap (frontier is already
-        # materialized, so the count is ~free)
-        if frontier_cap is not None and n_front > frontier_cap:
-            wf = Window.partitionBy("root", "seed").orderBy(F.asc("node"))
-            fr = (
-                fr.withColumn("_rn", F.row_number().over(wf))
-                .filter(F.col("_rn") <= frontier_cap)
-                .drop("_rn")
-            )
+
+    # path_k > 1: a key's rows gathered in ``_l``, reduced to the path_k
+    # smallest distinct paths among its min-hop rows
+    min_hops = F.array_min(F.transform(F.col("_l"), lambda x: x["hops"]))
+    at_min = F.filter(F.col("_l"), lambda x: x["hops"] == F.col("_minh"))
+
+    def _smallest_paths(at_min):
+        paths = F.array_distinct(F.flatten(F.transform(at_min, lambda x: x["paths"])))
+        return F.slice(F.array_sort(paths), 1, path_k)
+
+    def step(best, frontier, n, r):
+        h = r + 2
+        fr = _cap(frontier, n, frontier_cap, ["root", "seed"], [F.asc("node")])
         nxt_cols = [
             "root",
             "seed",
@@ -335,10 +414,9 @@ def seeded_support(
                     ),
                 ).alias("paths")
             )
-        last_round = h == max_hops
         nxt = fr.join(e, fr["node"] == e["src"]).select(*nxt_cols)
         merged = best.unionByName(nxt)
-        if last_round and h == 2 and (path_k == 1 or not carry):
+        if h == max_hops == 2 and (path_k == 1 or not carry):
             # 2-hop fast path (round 7): skip the last-round merge
             # aggregation — a full sort + exchange + sort of the whole BFS
             # state that the final reduction immediately re-aggregates.
@@ -351,9 +429,8 @@ def seeded_support(
             # which keeps its count-at-min-distance == distinct seeds and
             # its min(struct) == best path (duplicates at different hop
             # levels collapse under min/CASE exactly as the merge did).
-            best = merged
-            break
-        if carry and path_k == 1:
+            new = merged
+        elif carry and path_k == 1:
             # path_k=1 fast path (round 7): every row's ``paths`` is a
             # singleton array, and struct comparison is (hops, then the
             # path's (k, p)) — exactly the min-hop-then-lexicographic rule
@@ -361,7 +438,7 @@ def seeded_support(
             # plain min() is a declarative aggregate: it partial-aggregates
             # map-side (HashAggregate), where collect_list ships every row
             # through an ObjectHashAggregate with no combine.
-            new_best = (
+            new = (
                 merged.groupBy("root", "seed", "node")
                 .agg(F.min(F.struct("hops", "paths")).alias("_b"))
                 .select(
@@ -378,54 +455,21 @@ def seeded_support(
             g = merged.groupBy("root", "seed", "node").agg(
                 F.collect_list(F.struct("hops", "paths")).alias("_l")
             )
-            g = g.withColumn(
-                "_minh", F.array_min(F.transform(F.col("_l"), lambda x: x["hops"]))
-            )
-            new_best = g.select(
+            new = g.withColumn("_minh", min_hops).select(
                 "root",
                 "seed",
                 "node",
                 F.col("_minh").alias("hops"),
-                F.slice(
-                    F.array_sort(
-                        F.array_distinct(
-                            F.flatten(
-                                F.transform(
-                                    F.filter(
-                                        F.col("_l"),
-                                        lambda x: x["hops"] == F.col("_minh"),
-                                    ),
-                                    lambda x: x["paths"],
-                                )
-                            )
-                        )
-                    ),
-                    1,
-                    path_k,
-                ).alias("paths"),
+                _smallest_paths(at_min).alias("paths"),
             )
         else:
-            new_best = merged.groupBy("root", "seed", "node").agg(
+            new = merged.groupBy("root", "seed", "node").agg(
                 F.min("hops").alias("hops")
             )
-        if last_round:
-            # the delta frontier exists only to feed the NEXT round — on
-            # the final round it would be a full-state join + checkpoint +
-            # count that nothing consumes; the un-checkpointed state flows
-            # straight into the final reduction below
-            best = new_best
-            break
-        new_best = new_best.localCheckpoint(eager=True)
-        changed = new_best.join(
-            best.select("root", "seed", "node", F.col("hops").alias("_oh")),
-            ["root", "seed", "node"],
-            "left",
-        ).filter(F.col("_oh").isNull() | (F.col("hops") < F.col("_oh"))).drop("_oh")
-        frontier = changed.localCheckpoint(eager=True)
-        best = new_best
-        n_front = frontier.count()
-        if n_front == 0:
-            break
+        return new, lambda nb: _improved(nb, best, ["root", "seed", "node"], "hops")
+
+    # the final round's state flows un-materialized into the reduction below
+    best = _fixpoint(step, best, frontier, max_hops - 1, count=True)
     # --- final per-(root, node) reduction: ONE hash-agg ---------------------
     # (root, seed, node) is unique in ``best`` (hop1 is per-key unique and
     # every merge is a groupBy on the key), so "distinct seeds at the min
@@ -473,25 +517,11 @@ def seeded_support(
     g = best.groupBy("root", "node").agg(
         F.collect_list(F.struct("hops", "seed", "paths")).alias("_l")
     )
-    g = g.withColumn(
-        "_minh", F.array_min(F.transform(F.col("_l"), lambda x: x["hops"]))
-    )
-    at_min = F.filter(F.col("_l"), lambda x: x["hops"] == F.col("_minh"))
+    g = g.withColumn("_minh", min_hops)
     support = F.size(
         F.array_distinct(F.transform(at_min, lambda x: x["seed"]))
     )
-    paths = F.transform(
-        F.slice(
-            F.array_sort(
-                F.array_distinct(
-                    F.flatten(F.transform(at_min, lambda x: x["paths"]))
-                )
-            ),
-            1,
-            path_k,
-        ),
-        lambda s: s["p"],
-    )
+    paths = F.transform(_smallest_paths(at_min), lambda s: s["p"])
     return g.select(
         "root",
         "node",
@@ -523,95 +553,37 @@ def connected_components(
     max_iter: int = 20,
     broadcast_max_edges: int = _CC_BROADCAST_MAX_EDGES,
     dedup_edges: bool = True,
-    spill_every: int = 4,
     spill_dir: str | None = None,
 ) -> DataFrame:
     """G8: connected components — min-label propagation with pointer
     jumping over a DELTA frontier (the canonicalization CC of the
     north_rule, GraphFrames-style iterative joins).
 
-    Scale decisions, all measured (round-1 + round-6 A/Bs):
-      1. The symmetric edge list is ``localCheckpoint``ed ONCE up front —
-         uncached, every round's action re-runs the full upstream lineage
-         (source scan + dedup shuffles), which dominated wall time.
-      2. Propagation is ONE aggregation, not a join pair: neighbor
-         contributions (edge list ⋈ frontier) union'd with each node's own
-         row, then ``groupBy(node).agg(min)`` — the previous label rides
-         along as ``min(old)`` (null on contribution rows), so the delta is
-         a filter, not a probe join.
-      3. Pointer jumping ×4 per round against the PREVIOUS round's
-         materialized parent table ("stale" jumps). Stale lookups are safe:
-         labels only ever decrease and the propagation-only fixpoint is
-         already correct (at a fixpoint adjacent nodes must share a label),
-         so jumping is purely an accelerator. Looking up the materialized
-         table means the k jump joins share one cheap build-side scan
-         instead of re-executing the round's plan k times (the round-5
-         shape recomputed the un-materialized plan per jump level).
-      4. Per-round ``localCheckpoint`` + a changed-row count on the
-         checkpointed (AQE-coalesced, lineage-free) table. A/B'd against
-         persist()+fused count: persist keeps the full logical plan alive,
-         so analysis cost and 32-task cached stages grow each round
-         (1.0→1.7 s/round) where the checkpoint rounds stay flat at
-         ~1.0 s with 3-5 partitions.
-      5. Size gate: while the edge list is ≤ ``broadcast_max_edges`` rows
-         the frontier and jump-lookup sides are explicitly broadcast (no
-         shuffle writes at all — the only exchange left is the groupBy);
-         above the gate the same plan runs unhinted and AQE handles
-         strategy + skew. Measured round 6 (interleaved A/B, same JVM):
-         old 9.04 s best vs new 4.42 s best on the sf0.1 bench graph
-         (150k nodes / 270k directed edges).
-      6. STATS-RESET SPILL every ``spill_every`` rounds (parquet
-         round-trip instead of the localCheckpoint). Root cause, found by
-         jstack round 6: Catalyst's size-only stats visitor MULTIPLIES
-         child sizeInBytes at every join, and checkpoints carry
-         ``originStats`` forward — a round that references its own prior
-         table k times therefore compounds the estimate into a power
-         tower (bits ×k per round), and by ~25-30 cumulative join
-         references the BigInt arithmetic inside stats estimation alone
-         burns 50-100 s per round (measured: round 8 = 98 s on a 55-node
-         graph; the round-5 shape had the same latent bug — it was never
-         driven past 6 rounds). A parquet read-back resets sizeInBytes to
-         the real file size, so per-round cost stays flat (forced-12-round
-         A/B: ≤3 s/round with the spill vs 98 s at round 8 without).
-         Graphs that converge before ``spill_every`` rounds (the bench
-         graph: 3) never pay the spill. On a multi-executor cluster pass
-         ``spill_dir`` on shared storage: with ``spill_dir`` unset and a
-         non-local master the spill is DISABLED (localCheckpoint instead)
-         rather than silently writing executor-local files the read-back
-         could not see — deep graphs then pay the stats tower but stay
-         correct; spill slots are deleted after convergence.
-      7. Node ids are type-generic (round 7): every comparison/min here is
-         orderable-type algebra, so callers with numeric ids pass them
-         straight through — a bigint key shuffles 8 bytes/row where the
-         zero-padded string spelling shuffled ~20 and compares word-wide
-         instead of byte-wise (guide §2.3 "narrower types"). The jump LUT
-         is also filtered to NON-ROOT pointers (node != comp): self-
-         pointers contribute nothing under the left-join + coalesce, and
-         after round 1 most nodes already point at their root, so the four
-         jump-join build sides shrink from |V| to the not-yet-settled set
-         (AQE then broadcasts them even above the edge-count gate).
+    Each round is ONE aggregation: neighbor contributions (edge list ⋈
+    changed rows) and root hooks union'd with each node's own row,
+    ``groupBy(node).agg(min)``, then 4 pointer jumps. Every label is the id
+    of a node in the same component, so hooks and jumps keep labels inside
+    their component. The jumps look up the PREVIOUS round's materialized
+    parent table ("stale" jumps), which is safe because labels only ever
+    decrease and the propagation-only fixpoint is already correct (at a
+    fixpoint adjacent nodes share a label): hooks and jumps only accelerate it.
 
-    Returns (node, component) with component = min node id in the component
-    (min over the id's native ordering; canonical entity id per SURVEY.md
-    §7.6).
+    Every 4th round's state goes through a parquet round trip instead of a
+    ``localCheckpoint``: Catalyst's size-only stats MULTIPLY child sizes at
+    every join and checkpoints carry them forward, so a round that reads its
+    prior table k times compounds the estimate into a power tower whose
+    BigInt arithmetic alone costs ~100 s per round past ~8 rounds; the
+    read-back resets it to the real file size. The spill goes to a temp dir
+    only under a local master, where executors share the driver's
+    filesystem; on a cluster pass ``spill_dir`` on shared storage, or deep
+    graphs fall back to checkpoints and pay the stats tower (slow, still
+    correct).
+
+    Node ids may be any orderable type. Raises RuntimeError when rows still
+    change after ``max_iter`` rounds. Returns (node, component) with
+    component = min node id in the component (canonical entity id per
+    SURVEY.md §7.6).
     """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    if spill_dir is None and not edges.sparkSession.sparkContext.master.startswith(
-        "local"
-    ):
-        # ADVICE r6: a driver-local tempdir is invisible to executors on a
-        # real cluster — the parquet read-back would silently return
-        # partial data. Correctness first: disable the spill (fall back to
-        # localCheckpoint; slower past ~spill_every rounds, never wrong).
-        spill_every = 0
-    spill_base = spill_dir or os.path.join(
-        tempfile.gettempdir(), f"cc_spill_{uuid.uuid4().hex}"
-    )
-    spill_used = False
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
     ).unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -621,20 +593,25 @@ def connected_components(
         # requirement; callers whose edges are distinct by construction pass
         # dedup_edges=False and the symmetrize step becomes fully narrow.
         sym = sym.distinct()
-    sym = sym.localCheckpoint(eager=True)  # materialize: reused every round
+    sym = _checkpoint(sym)  # materialize: reused every round
     id_type = sym.schema["u"].dataType  # node ids: any orderable type
-    # one cheap count on the materialized edges decides the join strategy
-    small = sym.count() <= broadcast_max_edges
+    # one cheap count on the materialized edges decides the join strategy;
+    # it also bounds the node count, since every node appears as ``u``
+    n_edges = sym.count()
+    small = n_edges <= broadcast_max_edges
     B = F.broadcast if small else (lambda df: df)
     # parent pointers: node → min(neighbor ∪ self); every node starts dirty
-    parent = (
+    parent = _checkpoint(
         sym.groupBy("u")
         .agg(F.least(F.min("v"), F.first("u")).alias("p"))
-        .select(F.col("u").alias("node"), F.least(F.col("p"), F.col("node")).alias("comp"))
-    ).localCheckpoint(eager=True)
-    changed = parent
+        .select(
+            F.col("u").alias("node"),
+            F.least(F.col("p"), F.col("node")).alias("comp"),
+            F.col("u").alias("_old"),
+        )
+    )
 
-    for _r in range(max_iter):
+    def step(parent, changed, n, r):
         # propagate newly-lowered labels (delta frontier) + carry the old
         # label, in a single aggregation: contribution rows have old=null,
         # each node's self row has old=comp, min() ignores nulls.
@@ -649,67 +626,89 @@ def connected_components(
         self_rows = parent.select(
             "node", F.col("comp").alias("cand"), F.col("comp").alias("old")
         )
-        stepped = (
-            contrib.unionByName(self_rows)
+        # root hooks: a changed row offers its new label to the node named by
+        # its old label, so next round's jumps move that label's whole region
+        # at once instead of one hop per round (Shiloach–Vishkin hooking)
+        hooks = changed.filter(F.col("_old") != F.col("node")).select(
+            F.col("_old").alias("node"),
+            F.col("comp").alias("cand"),
+            F.lit(None).cast(id_type).alias("old"),
+        )
+        jumped = (
+            contrib.unionByName(self_rows).unionByName(hooks)
             .groupBy("node")
             .agg(F.min("cand").alias("comp"), F.min("old").alias("_old"))
         )
-        # stale pointer jumps: all k levels look up the SAME materialized
-        # previous-round parent (comp ← parentᵏ(comp)); identical broadcast
+        # stale pointer jumps: all levels look up the SAME materialized
+        # previous-round parent (comp ← parent⁴(comp)); identical broadcast
         # plans are built once and reused. Self-pointers (node == comp) are
-        # filtered out of the LUT — under the left join + coalesce they
-        # resolve to the same value, and dropping them shrinks the build
-        # side to the not-yet-settled nodes (decision 7).
+        # left out of the LUT — under the left join + coalesce they resolve
+        # to the same value, and dropping them shrinks the build side to the
+        # not-yet-settled nodes (AQE then broadcasts it even above the gate).
         lut = B(
             parent.filter(F.col("node") != F.col("comp")).select(
                 F.col("node").alias("comp"), F.col("comp").alias("comp2")
             )
         )
-        jumped = stepped
         for _j in range(4):
             jumped = jumped.join(lut, "comp", "left").select(
                 "node",
                 F.least(F.col("comp"), F.coalesce(F.col("comp2"), F.col("comp"))).alias("comp"),
                 "_old",
             )
-        if spill_every and (_r + 1) % spill_every == 0:
-            # stats-reset spill (decision 6): alternate two slots so the
-            # overwrite never clobbers the file a live plan still reads
-            path = f"{spill_base}_{(_r // spill_every) % 2}"
-            jumped.write.mode("overwrite").parquet(path)
-            jumped = edges.sparkSession.read.parquet(path)
-            spill_used = True
-        else:
-            jumped = jumped.localCheckpoint(eager=True)
-        changed = jumped.filter(F.col("comp") != F.col("_old")).select("node", "comp")
-        parent = jumped.select("node", "comp")
-        # convergence probe: isEmpty short-circuits at the first changed
-        # row on non-converged rounds (a count scans everything), and
-        # round 0 is never probed — the init round changes essentially
-        # every node, so its probe is a guaranteed-wasted job (measured
-        # A/B: 5.06 vs 5.54 s best on the g8 entry). Worst case for the
-        # skip is one extra (empty) round on a trivially-converged input.
-        if _r >= 1 and changed.isEmpty():
-            break
-    out = parent.select(F.col("node"), F.col("comp").alias("component"))
-    if spill_used and spill_dir is None:
-        # ADVICE r6: reclaim the tempdir slots. The final parent may still
-        # read from a spill file, so cut that dependency not to delete a
-        # file a live plan reads.
-        out = out.localCheckpoint(eager=True)
-        for slot in (f"{spill_base}_0", f"{spill_base}_1"):
-            shutil.rmtree(slot, ignore_errors=True)
+        return jumped, lambda j: j.filter(F.col("comp") != F.col("_old"))
+
+    # the probe reads a filter of the materialized state, and isEmpty stops
+    # at the first changed row; round 0 changes essentially every node, so
+    # probing it is a guaranteed-wasted job (measured A/B: 5.06 vs 5.54 s
+    # best on the g8 entry)
+    out = _fixpoint(
+        step, parent, parent, max_iter,
+        lazy_delta=True, probe_from=1, strict=True, spill=True, spill_dir=spill_dir,
+    ).select(F.col("node"), F.col("comp").alias("component"))
     # the checkpointed result has UNKNOWN stats downstream (ExistingRDD), so
     # consumers joining the component table back against their node tables
     # never get an auto-broadcast even when it is tiny. Hint it explicitly
-    # while it is small enough (a count on the checkpointed table is one
-    # cheap job): the in-loop gate already commits to broadcasting
-    # node-keyed tables of this size every round, so the hint adds no new
-    # memory envelope. Measured (round 7, sf1 g8): the singleton left join
-    # against all 1.5M orders drops its shuffle, ~1.5 s.
-    if small and out.count() <= 4_000_000:
+    # while it is small enough: the in-loop gate already commits to
+    # broadcasting node-keyed tables of this size every round, so the hint
+    # adds no new memory envelope. Measured (round 7, sf1 g8): the singleton
+    # left join against all 1.5M orders drops its shuffle, ~1.5 s.
+    if small and n_edges <= 4_000_000:
         out = F.broadcast(out)
     return out
+
+
+def _power_iteration(e: DataFrame, rank0, teleport, alpha: float, iters: int) -> DataFrame:
+    """Power iteration over the materialized edge list ``e`` (src, dst):
+    rank₀ = ``rank0``, then per round rank = ``teleport`` + α·Σ
+    rank(src)/outdeg(src); the state is checkpointed every 6th round.
+    ``rank0`` and ``teleport`` are Columns over ``node``. Returns
+    (node, score) normalized by max."""
+    nodes = _checkpoint(
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    base = nodes.select("node", rank0.alias("rank"), teleport.alias("_tele"))
+
+    def step(ranks, frontier, n, r):
+        contribs = (
+            ranks.join(e, ranks["node"] == e["src"])
+            .join(out_deg, "src")
+            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        new = base.join(contribs, "node", "left").select(
+            "node",
+            (F.col("_tele") + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))).alias("rank"),
+        )
+        return new, None
+
+    ranks = _fixpoint(step, base.select("node", "rank"), None, iters, every=6)
+    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
+    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
 
 
 def candidate_graph_rank(
@@ -728,39 +727,9 @@ def candidate_graph_rank(
 
     Returns (node, score) with score in [0, 1].
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("node") == root, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    for i in range(iters):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(1.0 - alpha)
-                + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % 6 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
-    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
+    e = _checkpoint(edges.select("src", "dst").distinct())
+    is_root = F.when(F.col("node") == root, F.lit(1.0)).otherwise(F.lit(0.0))
+    return _power_iteration(e, is_root, F.lit(1.0 - alpha), alpha, iters)
 
 
 def pagerank(
@@ -773,51 +742,15 @@ def pagerank(
     (knowledge_graph.py:1288-1345: α=0.85, 24 iterations, root-seeded).
 
     Returns (node, score). Per iteration one shuffle (groupBy dst); ranks
-    checkpointed every 5 rounds to cut lineage. The edge list is
+    checkpointed every 6 rounds to cut lineage. The edge list is
     localCheckpoint-ed once up front (mirroring candidate_graph_rank /
     bounded_sssp / connected_components): the loop body joins `e` every
     iteration, and without the checkpoint each of the 24 iterations would
     re-evaluate the full upstream triple pipeline.
     """
-    e = edges.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst")
-    ).localCheckpoint(eager=True)
-    nodes = e.select(F.col("src").alias("node")).unionByName(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().localCheckpoint(eager=True)
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    n_nodes = nodes.count()
-
-    if personalized_root is not None:
-        base = nodes.select(
-            "node",
-            F.when(F.col("node") == personalized_root, F.lit(1.0))
-            .otherwise(F.lit(0.0))
-            .alias("base"),
-        )
+    e = _checkpoint(edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
+    if personalized_root is None:
+        base = F.lit(1.0)  # scores are max-normalized: no 1/|V| needed
     else:
-        base = nodes.select("node", F.lit(1.0 / n_nodes).alias("base"))
-
-    ranks = base.select("node", F.col("base").alias("rank"))
-    for i in range(iters):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            base.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    (1.0 - alpha) * F.col("base")
-                    + alpha * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % 5 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    mx = ranks.agg(F.max("rank")).first()[0] or 1.0
-    return ranks.select("node", (F.col("rank") / F.lit(mx)).alias("score"))
+        base = F.when(F.col("node") == personalized_root, F.lit(1.0)).otherwise(F.lit(0.0))
+    return _power_iteration(e, base, (1.0 - alpha) * base, alpha, iters)

@@ -1,5 +1,6 @@
 """G2/G6/G8 graph operators on hand-computable graphs."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgcompass_spark.operators.graph import (
@@ -62,6 +63,10 @@ def test_connected_components_chain(spark):
     out = {r["node"]: r["component"] for r in connected_components(e).collect()}
     assert set(out.values()) == {"n00"}
     assert len(out) == 13
+    # one round cannot settle the chain: partial labels must not pass
+    # silently as components
+    with pytest.raises(RuntimeError, match=r"\b1 rounds"):
+        connected_components(e, max_iter=1)
 
 
 def test_connected_components_broadcast_gate_equivalence(spark):
@@ -136,11 +141,11 @@ def test_pagerank_checkpoints_edge_lineage(spark, tmp_path):
     assert len(list(marker.iterdir())) == 1
 
 
-def test_connected_components_random_vs_union_find(spark):
-    """Randomized cross-check of the rewritten CC: seeded random graphs
-    (mixed density, self-loops, duplicate edges, singleton components via
-    isolated labels) against a pure-Python union-find, through BOTH the
-    broadcast fast path and the forced plain-join path."""
+def _check_cc_random_vs_union_find(spark):
+    """Seeded random graphs (mixed density, self-loops, duplicate edges,
+    singleton components via isolated labels) against a pure-Python
+    union-find, through BOTH the broadcast fast path and the forced
+    plain-join path."""
     import random
 
     rng = random.Random(1234)
@@ -184,3 +189,23 @@ def test_connected_components_random_vs_union_find(spark):
         assert set(got.values()) == {
             c for x, c in expected.items() if x in got
         }
+
+
+def test_connected_components_random_vs_union_find(spark):
+    """Randomized cross-check of the rewritten CC against union-find."""
+    _check_cc_random_vs_union_find(spark)
+
+
+def test_connected_components_stats_reset_spill(spark, tmp_path, monkeypatch):
+    """With its period patched to 1 the parquet stats-reset spill replaces
+    every round's checkpoint, so each round reads the previous round's slot
+    while overwriting the other: labels must still equal union-find, and
+    the temp slots must be gone afterwards."""
+    import tempfile
+
+    from kgcompass_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_SPILL_EVERY", 1)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _check_cc_random_vs_union_find(spark)
+    assert not list(tmp_path.glob("cc_spill_*"))

@@ -7,13 +7,15 @@ test that caught it is extended here to the OTHER iterative operators
 driven to >= 2x their bench round counts (bench: max_hops=2 for the
 evidence/BFS entries, iters=12 for g6) on seeded random graphs with
 long-chain components, and checked against closed-form pure-Python
-references.
+references. candidate_graph_rank shares pagerank's reference with its own
+start vector and teleport term.
 """
 
 import random
 
 from kgcompass_spark.operators.graph import (
     bounded_sssp_multi,
+    candidate_graph_rank,
     pagerank,
     seeded_support,
 )
@@ -236,12 +238,26 @@ def test_bounded_sssp_multi_random_vs_dp_deep(spark):
         assert not extras, extras
 
 
-def test_pagerank_random_vs_power_iteration_deep(spark):
-    """pagerank at >2x the bench iteration count (25 vs 12) — drives past
-    several checkpoint boundaries — against a pure-Python power iteration
-    of the exact formula (parallel edges kept: they weight contributions)."""
-    rng = random.Random(2024)
-    n, m, iters = 30, 90, 25
+def _power_iteration_reference(edges, rank0, teleport, alpha, iters):
+    """Pure-Python power iteration: rank = teleport(v) + α·Σ rank(src)/outdeg(src)
+    from ``rank0(v, nodes)``, normalized by max."""
+    nodes = sorted({x for e in edges for x in e})
+    out_deg = {}
+    for s, _d in edges:
+        out_deg[s] = out_deg.get(s, 0) + 1
+    ranks = {v: rank0(v, nodes) for v in nodes}
+    for _ in range(iters):
+        inflow = {}
+        for s, d in edges:
+            inflow[d] = inflow.get(d, 0.0) + ranks[s] / out_deg[s]
+        ranks = {
+            v: teleport(v, nodes) + alpha * inflow.get(v, 0.0) for v in nodes
+        }
+    mx = max(ranks.values())
+    return {v: r / mx for v, r in ranks.items()}
+
+
+def _power_iteration_graph(rng, n, m):
     edges = [
         (f"n{rng.randrange(n):02d}", f"n{rng.randrange(n):02d}")
         for _ in range(m)
@@ -251,28 +267,55 @@ def test_pagerank_random_vs_power_iteration_deep(spark):
         nxt = f"c{i:02d}"
         edges.append((prev, nxt))
         prev = nxt
-    nodes = sorted({x for e in edges for x in e})
-    out_deg = {}
-    for s, _d in edges:
-        out_deg[s] = out_deg.get(s, 0) + 1
-    ranks = {v: 1.0 / len(nodes) for v in nodes}
-    alpha = 0.85
-    for _ in range(iters):
-        inflow = {}
-        for s, d in edges:
-            inflow[d] = inflow.get(d, 0.0) + ranks[s] / out_deg[s]
-        ranks = {
-            v: (1 - alpha) * (1.0 / len(nodes)) + alpha * inflow.get(v, 0.0)
-            for v in nodes
-        }
-    mx = max(ranks.values())
-    expected = {v: r / mx for v, r in ranks.items()}
+    return edges
+
+
+def test_pagerank_random_vs_power_iteration_deep(spark):
+    """pagerank at >2x the bench iteration count (25 vs 12) — drives past
+    several checkpoint boundaries — against a pure-Python power iteration
+    of the exact formula (parallel edges kept: they weight contributions)."""
+    rng = random.Random(2024)
+    iters, alpha = 25, 0.85
+    edges = _power_iteration_graph(rng, n=30, m=90)
+    expected = _power_iteration_reference(
+        edges,
+        rank0=lambda v, nodes: 1.0 / len(nodes),
+        teleport=lambda v, nodes: (1 - alpha) * (1.0 / len(nodes)),
+        alpha=alpha,
+        iters=iters,
+    )
 
     e_df = spark.createDataFrame(
         [(s, "e", d, 1.0) for s, d in edges],
         "subj string, predicate string, obj string, weight double",
     )
     got = {r["node"]: r["score"] for r in pagerank(e_df, iters=iters).collect()}
+    assert set(got) == set(expected)
+    for v, s in got.items():
+        assert abs(s - expected[v]) < 1e-9, (v, s, expected[v])
+
+
+def test_candidate_graph_rank_random_vs_power_iteration_deep(spark):
+    """candidate_graph_rank (the reference's unsupervised graph-rank blend)
+    against the same reference: parallel edges collapse, rank₀ is the root
+    indicator and the teleport term is the constant 1−α. 25 iterations
+    cross several checkpoint boundaries."""
+    rng = random.Random(2025)
+    iters, alpha, root = 25, 0.85, "n00"
+    edges = _power_iteration_graph(rng, n=30, m=90)
+    expected = _power_iteration_reference(
+        sorted(set(edges)),
+        rank0=lambda v, nodes: 1.0 if v == root else 0.0,
+        teleport=lambda v, nodes: 1 - alpha,
+        alpha=alpha,
+        iters=iters,
+    )
+
+    e_df = spark.createDataFrame(edges, "src string, dst string")
+    got = {
+        r["node"]: r["score"]
+        for r in candidate_graph_rank(e_df, root, alpha=alpha, iters=iters).collect()
+    }
     assert set(got) == set(expected)
     for v, s in got.items():
         assert abs(s - expected[v]) < 1e-9, (v, s, expected[v])
