@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kgcompass_spark.functions.hashing import md5_60_sql  # noqa: E402
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -1132,16 +1134,10 @@ def _ranked_sweep_fixture(spark, sf_dir):
     from kgcompass_spark.plans.related import ranked_related_sweep
 
     fx = _rr_fixture_kg(spark, sf_dir)
-    root_emb = fx["node_embeddings"].sparkSession.createDataFrame(
-        [("issue:root", fx["root_vec"])], "node string, embedding array<double>"
-    )
-    node_emb = fx["node_embeddings"].unionByName(root_emb)
-    issue_texts = spark.createDataFrame(
-        [("root", _RR_ROOT_TEXT)], "url string, text string"
-    )
     out = ranked_related_sweep(
-        fx["triples"], fx["entities"], issue_texts, _SWEEP_PARAMS,
-        max_cost=2.0, identifier_boost_weight=0.2, node_embeddings=node_emb,
+        fx["triples"], fx["entities"], fx["root_issue_texts"], _SWEEP_PARAMS,
+        max_cost=2.0, identifier_boost_weight=0.2,
+        node_embeddings=fx["embeddings_with_root"],
     )
     return out.select(
         "param_tag", "node", "entity_type",
@@ -1161,16 +1157,10 @@ def _result_documents_fixture(spark, sf_dir):
     from kgcompass_spark.plans.results import result_documents
 
     fx = _rr_fixture_kg(spark, sf_dir)
-    root_emb = spark.createDataFrame(
-        [("issue:root", fx["root_vec"])], "node string, embedding array<double>"
-    )
-    node_emb = fx["node_embeddings"].unionByName(root_emb)
-    issue_texts = spark.createDataFrame(
-        [("root", _RR_ROOT_TEXT)], "url string, text string"
-    )
     ranked = ranked_related_all(
-        fx["triples"], fx["entities"], issue_texts, max_cost=2.0, limit=25,
-        identifier_boost_weight=0.2, node_embeddings=node_emb,
+        fx["triples"], fx["entities"], fx["root_issue_texts"], max_cost=2.0,
+        limit=25, identifier_boost_weight=0.2,
+        node_embeddings=fx["embeddings_with_root"],
     )
     n = _t(spark, sf_dir, "nation")
     nk = F.col("n_nationkey").cast("string")
@@ -1215,8 +1205,10 @@ def _result_documents_fixture(spark, sf_dir):
 
 def _rr_fixture_kg(spark, sf_dir):
     """Deterministic nation/supplier KG + metadata + fixture embeddings
-    shared by the ranked_related_fixture and ranked_sweep_fixture entries
-    (see _ranked_related_fixture's docstring for the shape)."""
+    shared by the ranked_related_fixture, ranked_sweep_fixture and
+    result_documents_fixture entries (see _ranked_related_fixture's
+    docstring for the shape). ``embeddings_with_root`` adds the root
+    issue's vector; ``root_issue_texts`` is the root's one-row text table."""
     n = _t(spark, sf_dir, "nation")
     s = _t(spark, sf_dir, "supplier")
     emb = _t(spark, sf_dir, "embeddings")
@@ -1301,9 +1293,16 @@ def _rr_fixture_kg(spark, sf_dir):
         float(x)
         for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
+    root_emb = spark.createDataFrame(
+        [("issue:root", root_vec)], "node string, embedding array<double>"
+    )
     return dict(
         triples=triples, entities=entities, issue_texts=issue_texts,
         node_embeddings=node_embeddings, root_vec=root_vec,
+        embeddings_with_root=node_embeddings.unionByName(root_emb),
+        root_issue_texts=spark.createDataFrame(
+            [("root", _RR_ROOT_TEXT)], "url string, text string"
+        ),
     )
 
 
@@ -1630,11 +1629,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def _h60(expr: str) -> str:
-    """DuckDB twin of functions.hashing.md5_60 (60-bit bigint from md5)."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
 # whitespace tokens, lowercased, empties dropped — DuckDB twin of the
 # Spark `_tokens` / text_quality.tokens helpers
 _TOKS_SQL = (
@@ -1671,7 +1665,7 @@ def _build_lsh_alias_oracle(
             "SELECT ns, {i} AS band_id, {h} AS band_hash FROM {src}".format(
                 i=i,
                 src=src,
-                h=_h60(
+                h=md5_60_sql(
                     " || ',' || ".join(
                         f"h{i * rpb + j}::VARCHAR" for j in range(rpb)
                     )
@@ -1695,8 +1689,8 @@ def _build_lsh_alias_oracle(
         ),
         mg AS (SELECT ns, {grams('ns')} AS grams FROM (SELECT DISTINCT ns FROM mm)),
         ag AS (SELECT ns, {grams('ns')} AS grams FROM (SELECT DISTINCT ns FROM am)),
-        mh AS (SELECT ns, list_transform(grams, g -> {_h60('g')} % 2147483647) AS hh FROM mg),
-        ah AS (SELECT ns, list_transform(grams, g -> {_h60('g')} % 2147483647) AS hh FROM ag),
+        mh AS (SELECT ns, list_transform(grams, g -> {md5_60_sql('g')} % 2147483647) AS hh FROM mg),
+        ah AS (SELECT ns, list_transform(grams, g -> {md5_60_sql('g')} % 2147483647) AS hh FROM ag),
         msig AS (SELECT ns, {sig_cols} FROM mh),
         asig AS (SELECT ns, {sig_cols} FROM ah),
         mband AS ({band_union('msig')}),
@@ -1758,7 +1752,7 @@ def _build_lsh_canon_oracle(
     band_selects = " UNION ALL ".join(
         "SELECT entity_id, {i} AS band_id, {h} AS band_hash FROM sig".format(
             i=i,
-            h=_h60(
+            h=md5_60_sql(
                 " || ',' || ".join(f"h{i * rpb + j}::VARCHAR" for j in range(rpb))
             ),
         )
@@ -1783,7 +1777,7 @@ def _build_lsh_canon_oracle(
         gr AS (SELECT entity_id, list_distinct({grams}) AS grams, {grams} AS rawg FROM normd),
         hs AS (
           SELECT entity_id,
-                 list_transform(rawg, g -> {_h60('g')} % 2147483647) AS hh
+                 list_transform(rawg, g -> {md5_60_sql('g')} % 2147483647) AS hh
           FROM gr
         ),
         sig AS (SELECT entity_id, {sig_cols} FROM hs),
@@ -1846,7 +1840,7 @@ def _build_minhash_oracle(
     band_selects = " UNION ALL ".join(
         "SELECT doc_id, {i} AS band_id, {h} AS band_hash FROM sig".format(
             i=i,
-            h=_h60(
+            h=md5_60_sql(
                 " || ',' || ".join(
                     f"h{i * rows_per_band + j}::VARCHAR" for j in range(rows_per_band)
                 )
@@ -1868,7 +1862,7 @@ def _build_minhash_oracle(
         ),
         hs AS (
           SELECT doc_id,
-                 list_transform(shingles, s -> {_h60('s')} % 2147483647) AS hh
+                 list_transform(shingles, s -> {md5_60_sql('s')} % 2147483647) AS hh
           FROM sh
         ),
         sig AS (SELECT doc_id, {sig_cols} FROM hs),
@@ -1912,7 +1906,7 @@ def _build_simhash_oracle(bits: int = 60) -> str:
         WITH toks AS (
           SELECT doc_id, unnest({_TOKS_SQL}) AS tok FROM documents
         ),
-        h AS (SELECT doc_id, {_h60('tok')} AS h FROM toks),
+        h AS (SELECT doc_id, {md5_60_sql('tok')} AS h FROM toks),
         votes AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id)
         SELECT doc_id, ({pack})::BIGINT AS simhash FROM votes
     """
@@ -1927,15 +1921,15 @@ def _build_fingerprint_oracle(k: int = 8) -> str:
         ),
         tri AS (
           SELECT doc_id,
-            CASE WHEN len(tk) < 3 THEN [{_h60("array_to_string(tk, ' ')")}]
-                 ELSE [{_h60("array_to_string(tk[i+1:i+3], ' ')")}
+            CASE WHEN len(tk) < 3 THEN [{md5_60_sql("array_to_string(tk, ' ')")}]
+                 ELSE [{md5_60_sql("array_to_string(tk[i+1:i+3], ' ')")}
                        for i in generate_series(0, len(tk) - 3)]
             END AS th
           FROM toks
         ),
         sm AS (SELECT doc_id, (list_sort(th))[1:{k}] AS sm FROM tri)
         SELECT doc_id,
-               {_h60("array_to_string(list_transform(sm, x -> x::VARCHAR), ',')")} AS fp
+               {md5_60_sql("array_to_string(list_transform(sm, x -> x::VARCHAR), ',')")} AS fp
         FROM sm
     """
 
@@ -1951,7 +1945,7 @@ def _build_lsh_topk_oracle(n_planes: int = 8, k: int = 10) -> str:
         plane_terms = []
         for p in range(n_planes):
             seed = f"'{p}_' || (d - 1)::VARCHAR"
-            w = f"(({_h60(seed)} % 2000 - 1000)::DOUBLE / 1000.0)"
+            w = f"(({md5_60_sql(seed)} % 2000 - 1000)::DOUBLE / 1000.0)"
             dot = (
                 f"list_reduce(list_prepend(0.0::DOUBLE, "
                 f"list_transform(generate_series(1, len({emb})), "
@@ -2118,7 +2112,7 @@ def _build_ivf_oracle(n_cells: int = 16, n_probe: int = 4, k: int = 10) -> str:
     smallest md5_60(vec_id) base vectors, nearest-centroid assignment
     (cosine desc, cell asc), the query probes its n_probe nearest cells,
     exact cosine within probed cells, global top-k."""
-    h = _h60("vec_id::VARCHAR")
+    h = md5_60_sql("vec_id::VARCHAR")
     return f"""
         WITH emb AS (
           SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -3218,7 +3212,7 @@ def oracle_sql() -> dict[str, str]:
         # non-negative, so % equals Spark's pmod)
         "hash_sample_docs": f"""
             SELECT doc_id, lang, n_chars FROM documents
-            WHERE {_h60("doc_id::VARCHAR || ':s42'")} % 1000000 < 100000
+            WHERE {md5_60_sql("doc_id::VARCHAR || ':s42'")} % 1000000 < 100000
             ORDER BY doc_id
         """,
         # decontamination: same shingle construction as the minhash oracle

@@ -64,11 +64,6 @@ def extract_text_from_html(raw: bytes | str | None) -> str:
 
 
 @F.pandas_udf(StringType())
-def html_to_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_from_html)
-
-
-@F.pandas_udf(StringType())
 def page_text_udf(html: pd.Series, text: pd.Series) -> pd.Series:
     """Prefer pre-extracted text; decode html only where text is absent.
     The branch lives INSIDE the UDF because Catalyst evaluates a UDF column

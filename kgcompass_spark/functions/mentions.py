@@ -63,7 +63,6 @@ CLASSNAME_PATTERN = r"\b[A-Z][a-zA-Z_]{2,}\b"
 TRACEBACK_PATTERN = (
     r"File\s+\"([^\"]+?\.py)\",?\s*line\s+(\d+),?\s+in\s+([^\s\(]+)"
 )
-TRACEBACK_ALT_PATTERN = r"([\w/\.\-]+?\.py):(\d+):?\s+in\s+([\w.<>]+)"
 
 # M8 — Sphinx symbols :func:`x.y` etc (fl.py:124-126)
 SPHINX_PATTERN = r":(?:func|meth|class|mod|attr|obj|data|exc):`([^`]+)`"

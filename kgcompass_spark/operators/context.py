@@ -81,17 +81,6 @@ def context_tokens(col) -> F.Column:
     return F.array_distinct(F.concat(idents, versions))
 
 
-def _token_rows(df: DataFrame, keys: list[str], text_col) -> DataFrame:
-    """Explode the distinct context tokens of ``text_col`` per row."""
-    return df.select(*keys, F.explode(context_tokens(text_col)).alias("tok"))
-
-
-def issue_token_rows(issues: DataFrame) -> DataFrame:
-    """(url, warc_ts, tok) — the exploded issue-side token index (legacy
-    shape; the scoring path now consumes :func:`issue_token_arrays`)."""
-    return _token_rows(issues, ["url", "warc_ts"], F.col("clean_text"))
-
-
 def issue_token_arrays(issues: DataFrame) -> DataFrame:
     """(url, warc_ts, _itoks) — the per-page distinct context-token ARRAY.
     One regex-battery pass per page; the scoring join consumes the array

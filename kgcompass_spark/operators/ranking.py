@@ -2,9 +2,7 @@
 
   A4/A5 evidence support aggregation + best-path selection
         (export_kg_evidence_graph.py:234-246)
-  T2    per-type ranked truncation (knowledge_graph.py:1266-1273)
   T4    lexicographic rerank (export_kg_evidence_graph.py:163-194)
-  T7    final export split + cap at SEARCH_SPACE
 
 The evidence-graph mode is embedding-free and fully deterministic
 (kg_params.uses_embeddings = False in the reference export) — every window
@@ -15,8 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..config import SEARCH_SPACE
 
 
 def evidence_support(paths: DataFrame) -> DataFrame:
@@ -329,22 +325,6 @@ def _with_rerank_counts(df: DataFrame, exact_col, lex_col) -> DataFrame:
             F.size(F.array_intersect(lex_col, _candidate_lexical_terms(*cand_fields))),
         )
         .withColumn("boilerplate", _is_boilerplate(F.col("name"), F.col("file_path")))
-    )
-
-
-def per_type_topk(
-    ranked: DataFrame,
-    type_col: str = "entity_type",
-    order_cols: list | None = None,
-    k: int = SEARCH_SPACE,
-) -> DataFrame:
-    """T2/T7: per-type ranked truncation — row_number ≤ k within each
-    entity type, full deterministic key."""
-    order_cols = order_cols or [F.desc("support"), F.asc("distance"), F.asc("node")]
-    w = Window.partitionBy(type_col).orderBy(*order_cols)
-    return (
-        ranked.withColumn("type_rank", F.row_number().over(w))
-        .filter(F.col("type_rank") <= k)
     )
 
 
